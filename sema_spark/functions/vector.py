@@ -42,15 +42,18 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
 
 
-def _mat64(va: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+def _mat64(va: pd.Series, dim: int = 1) -> tuple[np.ndarray, np.ndarray]:
     """(n×dim float64 matrix, null row mask) from an array-column batch.
-    Null rows become zero rows (masked back to NULL by the caller).
-    Requires equal-length non-null rows — the fixed-dim embedding
-    contract every caller of these folds already has."""
+    Null rows become zero rows (masked back to NULL by the caller) as
+    wide as the non-null rows, or ``dim`` wide in an all-NULL batch —
+    callers folding against a query vector pass its length, so their
+    column loop stays in range.  Requires equal-length non-null rows —
+    the fixed-dim embedding contract every caller of these folds
+    already has."""
     vals = va.tolist()
     mask = np.array([v is None for v in vals], dtype=bool)
     if mask.any():
-        dim = next((len(v) for v in vals if v is not None), 1)
+        dim = next((len(v) for v in vals if v is not None), dim)
         zero = [0.0] * dim
         vals = [zero if v is None else v for v in vals]
     return np.stack([np.asarray(v, dtype=np.float64) for v in vals]), mask
@@ -106,7 +109,7 @@ def dot_literal_fold(vec, qvec: list[float]):
     def _dot(va):
         if len(va) == 0:
             return pd.Series([], dtype="float64")
-        A, mask = _mat64(va)
+        A, mask = _mat64(va, len(q))
         acc = np.zeros(A.shape[0], dtype=np.float64)
         for j in range(len(q)):
             acc = acc + A[:, j] * q[j]
@@ -133,7 +136,7 @@ def cosine_literal_fold(vec, qvec: list[float]):
     def _cos(va):
         if len(va) == 0:
             return pd.Series([], dtype="float64")
-        A, mask = _mat64(va)
+        A, mask = _mat64(va, len(q))
         num = np.zeros(A.shape[0], dtype=np.float64)
         na = np.zeros(A.shape[0], dtype=np.float64)
         for j in range(len(q)):

@@ -53,6 +53,7 @@ from sema_spark.operators.mentions import (
     with_content_sha,
 )
 from sema_spark.schemas import EDGES, LINKED_TRIPLES, NODES, TRIPLES
+from sema_spark.session import driver_frame
 from sema_spark.sources.checkpoint import (
     COMMIT_MARK,
     TOMBSTONE,
@@ -538,7 +539,7 @@ def semantic_search(
             list(chunks_with_embeddings.schema.fields)
             + [StructField("score", DoubleType()), StructField("matches_in_file", LongType())]
         )
-        return spark.createDataFrame([], empty_schema)
+        return driver_frame(spark, [], empty_schema)
     if norm_col is not None:
         # replicate the HOF's sequential float64 query-norm exactly:
         # acc = 0.0; acc += q[i]*q[i] in index order, then one sqrt —

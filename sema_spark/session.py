@@ -11,14 +11,20 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-# Tuned for the sandbox (local[32], 128 GiB). On a real cluster these
-# come from spark-submit conf; shuffle.partitions should be ~2-3x total
-# cores and is superseded by AQE coalescing anyway.
+# On a real cluster these come from spark-submit conf; shuffle.partitions
+# should be ~2-3x total cores and is superseded by AQE coalescing anyway.
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Let AQE coalesce CACHED outputs too.  Off (Spark's default), a
+    # persisted frame keeps its static shuffle partitioning: a
+    # checkpoint commit then runs shuffle.partitions-wide write and
+    # lineage jobs and writes one tiny parquet file per partition.  On,
+    # AQE sizes a cached plan's partitions from runtime shuffle
+    # statistics, as it does for every uncached shuffle.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Arrow batch size for pandas UDFs: big enough to amortize the
@@ -87,7 +93,24 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def driver_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` a StructType or DDL string) as a JVM ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` parallelizes the rows into a
+    PythonRDD, so every scan of the frame is a job that talks to Python
+    workers to compute nothing.  Built from an Arrow table the frame
+    plans as a ``LocalTableScan``: its scans stay in the JVM, and an
+    empty one lets the optimizer prune whatever reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

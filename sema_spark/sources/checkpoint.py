@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sema_spark.schemas import CHECKPOINT, LINEAGE
+from sema_spark.session import driver_frame
 
 TOMBSTONE = "__DELETED__"
 # marker repos in the checkpoint log (never real files): snapshot commit
@@ -110,7 +111,7 @@ def _read_parquet(
         return reader.parquet(path)
     except AnalysisException as e:
         if empty_schema is not None and any(c in str(e) for c in codes):
-            return spark.createDataFrame([], empty_schema)
+            return driver_frame(spark, [], empty_schema)
         raise
 
 
@@ -265,9 +266,7 @@ def _log_entry_rows(
         )
     if params is not None:
         parts.append(
-            spark.createDataFrame(
-                [(stage, PARAMS_MARK, PARAMS_MARK, params, run_id)], _CKPT_RUN_SCHEMA
-            )
+            driver_frame(spark, [(stage, PARAMS_MARK, PARAMS_MARK, params, run_id)], _CKPT_RUN_SCHEMA)
         )
     if not parts:
         return None
@@ -357,27 +356,14 @@ def _commit_increment(
     tombstone_paths: DataFrame | None = None,
 ) -> int:
     """Shared write tail: data → lineage → checkpoint (commit LAST; see
-    module docstring for the crash contract)."""
+    module docstring for the crash contract).  Returns the row count,
+    summed from the collected lineage rows — no separate count pass."""
     out = rows.withColumn("run_id", F.lit(run_id)).persist()
     try:
         out.write.mode("append").partitionBy("run_id", *(partition_cols or [])).parquet(
             _data_dir(base, stage)
         )
-        n_rows = out.count()
-        # Per-partition lineage rows (A3 generalized; north rule).
-        lineage = (
-            out.groupBy(F.spark_partition_id().cast("long").alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows",
-                F.lit(run_id).alias("run_id"),
-            )
-        )
-        spark.createDataFrame(lineage.collect(), LINEAGE).write.mode("append").parquet(
-            _lineage_dir(base, stage)
-        )
+        n_rows = _write_lineage(spark, base, stage, out, run_id)
         # Checkpoint LAST — only now do this run's rows become visible.
         # Params and tombstones ride the SAME append: visible iff the
         # data is.
@@ -391,6 +377,20 @@ def _commit_increment(
     finally:
         out.unpersist()
     return n_rows
+
+
+def _write_lineage(spark: SparkSession, base: str, stage: str, out: DataFrame, run_id: str) -> int:
+    """Append the per-partition lineage rows (A3 generalized; north
+    rule) of the persisted ``out``; returns their row total, which is
+    ``out``'s row count."""
+    lineage = (
+        out.groupBy(F.spark_partition_id().cast("long").alias("partition_id"))
+        .agg(F.count("*").alias("rows"))
+        .select(F.lit(stage).alias("stage"), "partition_id", "rows", F.lit(run_id).alias("run_id"))
+        .collect()
+    )
+    driver_frame(spark, lineage, LINEAGE).write.mode("append").parquet(_lineage_dir(base, stage))
+    return sum(r.rows for r in lineage)
 
 
 def read_stage_output(
@@ -566,6 +566,8 @@ def run_snapshot_stage(
 
     ``producer()`` → the complete output DataFrame for this snapshot.
     Crash before the commit row → snapshot invisible, rerun regenerates.
+    ``output_rows`` is summed from the collected lineage rows — no
+    separate count pass.
 
     ``params``: everything BEYOND the input keys that the output depends
     on — pipeline flags, upstream snapshot run_ids — folded into the
@@ -584,17 +586,9 @@ def run_snapshot_stage(
     try:
         parts = ["run_id"] + (partition_cols or [])
         out.write.mode("append").partitionBy(*parts).parquet(_data_dir(base, stage))
-        n_rows = out.count()
-        lineage = (
-            out.groupBy(F.spark_partition_id().cast("long").alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(F.lit(stage).alias("stage"), "partition_id", "rows", F.lit(run_id).alias("run_id"))
-        )
-        spark.createDataFrame(lineage.collect(), LINEAGE).write.mode("append").parquet(
-            _lineage_dir(base, stage)
-        )
-        spark.createDataFrame(
-            [(stage, COMMIT_MARK, COMMIT_MARK, fp, run_id)], _CKPT_RUN_SCHEMA
+        n_rows = _write_lineage(spark, base, stage, out, run_id)
+        driver_frame(
+            spark, [(stage, COMMIT_MARK, COMMIT_MARK, fp, run_id)], _CKPT_RUN_SCHEMA
         ).write.mode("append").parquet(_ckpt_dir(base, stage))
     finally:
         out.unpersist()
@@ -724,8 +718,8 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
     old_ckpt = list(_list_children(spark, _ckpt_dir(base, stage)))
     if last is not None and not has_new_rows:  # snapshot stage
         live = read_snapshot(spark, base, stage).withColumn("run_id", F.lit(rid))
-        ckpt_new = spark.createDataFrame(
-            [(stage, COMMIT_MARK, COMMIT_MARK, last.content_sha, rid)], _CKPT_RUN_SCHEMA
+        ckpt_new = driver_frame(
+            spark, [(stage, COMMIT_MARK, COMMIT_MARK, last.content_sha, rid)], _CKPT_RUN_SCHEMA
         )
     else:  # incremental stage: keep rows referenced by the live checkpoint
         # merge footers: a migrated dir can mix file generations with

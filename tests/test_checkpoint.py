@@ -3,6 +3,7 @@ from pyspark.sql import functions as F
 
 from sema_spark.corpus import corpus_df
 from sema_spark.operators.mentions import extract_triples, with_content_sha
+from sema_spark.schemas import TRIPLES
 from sema_spark.sources import checkpoint as ck
 
 
@@ -129,6 +130,30 @@ def test_lineage_rows(spark, src, tmp_path):
     lin = ck.read_lineage(spark, base, "triples")
     rows = lin.filter(F.col("run_id") == r.run_id).collect()
     assert rows and sum(x.rows for x in rows) == r.output_rows
+
+
+def test_absent_stage_reads_jvm_local(spark, tmp_path):
+    """An absent stage reads as an empty JVM-local relation: no
+    Python-RDD scan (and so no Python-worker job) behind it."""
+    base = str(tmp_path / "absent")
+    for df in (
+        ck.read_checkpoint_log(spark, base, "triples"),
+        ck.current_checkpoint(spark, base, "triples"),
+        ck.read_lineage(spark, base, "triples"),
+        ck.read_stage_output(spark, base, "triples", schema=TRIPLES),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.count() == 0
+
+
+def test_commit_data_files_right_sized(spark, src, tmp_path):
+    """AQE sizes the persisted commit output: a small increment writes
+    at most one data file per core, not one per shuffle partition."""
+    base = tmp_path / "kg"
+    r = ck.run_incremental_stage(spark, src, "triples", str(base), _transform)
+    files = list((base / "triples" / "data" / f"run_id={r.run_id}").glob("*.parquet"))
+    assert 0 < len(files) <= spark.sparkContext.defaultParallelism, len(files)
 
 
 def test_compact_incremental_stage(spark, src, tmp_path):

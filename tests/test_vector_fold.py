@@ -76,6 +76,21 @@ def test_dot_and_cosine_literal_fold_bitwise(vec_df):
                 assert math.isclose(a, b, rel_tol=0.0, abs_tol=0.0), r
 
 
+def test_literal_folds_all_null_batch(spark):
+    """A batch whose every row is NULL has no row to take the width
+    from; the literal folds must size it from the query vector and
+    return NULL, not index past the matrix."""
+    q = _vec(random.Random(5), 64)
+    df = spark.createDataFrame([(i, None) for i in range(5)], "id long, a array<float>")
+    got = df.select(
+        dot_literal_fold(F.col("a"), q).alias("dot"),
+        cosine_literal_fold(F.col("a"), q).alias("cos"),
+        l2_norm_fold(F.col("a")).alias("norm"),
+    ).collect()
+    assert len(got) == 5
+    assert all(r.dot is None and r.cos is None and r.norm is None for r in got)
+
+
 def test_encode_batch_matches_per_row():
     rng = random.Random(7)
     cases = [None, "", "ab", "abc", "a" * 1000, "q" * 257, "q" * 258, "q" * 259,
